@@ -1826,7 +1826,7 @@ def paragraph_dedup_increment(
     Production recipe (exactly-once under foreachBatch replay, proven
     with a mid-stream kill in tests/test_streaming.py::
     test_streaming_paragraph_dedup_snapshot_registry_restart): persist
-    the registry through ``SnapshotTable`` upserts keyed on ``s`` with
+    the registry through ``SnapshotTable.merge`` keyed on ``s`` with
     rows tagged by epoch, read it back filtered to epochs strictly
     before the current one (a replayed epoch must not see its own
     blocks), and overwrite an epoch-keyed output directory.

@@ -2531,7 +2531,7 @@ def a27_incremental_join_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the stored view is touched once by an anti-join on
     the dim key (shuffle on o_custkey — in production, partition or
     bucket the view by that key and the retraction prunes to touched
-    partitions, the same recipe as merge_upsert_partitioned); the
+    partitions, the same recipe as SnapshotTable.merge); the
     insert side joins the fact against only the UPDATED dim rows,
     broadcast-sized by definition of a dim update batch. No full view
     recompute anywhere."""

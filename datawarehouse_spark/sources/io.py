@@ -1,10 +1,10 @@
 """Warehouse IO — SURVEY.md §2.1 (S2-S7, S10-S14).
 
 Partitioned Hive-style layout, CTAS, dynamic-partition insert,
-small-file compaction and the Parquet merge/upsert fallback (the
-container has no Delta jars; `merge_upsert` is the documented
-full-partition-rewrite fallback of SURVEY §7.3.5 — on a Delta-enabled
-cluster it becomes a one-line MERGE INTO).
+small-file compaction and SCD2. Mutable tables (S11 upsert/delete) are
+not here: they go through :class:`..sources.snapshot.SnapshotTable`,
+whose ``merge``/``delete`` commit atomically and keep pinned readers
+consistent — on a Delta-enabled cluster that becomes MERGE INTO.
 """
 
 from __future__ import annotations
@@ -94,54 +94,6 @@ def compact_small_files(spark: SparkSession, path: str,
     return done
 
 
-def merge_upsert(current: DataFrame, updates: DataFrame, key: str) -> DataFrame:
-    """S11 — upsert (Kudu update semantics, docs/kudu.md:19): updated keys
-    replace current rows, new keys append. Anti-join + union — the
-    Parquet fallback for Delta MERGE INTO."""
-    survivors = current.join(updates, [key], "left_anti")
-    return survivors.unionByName(updates)
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key: str,
-    partition_col: str = "dt",
-) -> list:
-    """S11 at scale — partition-scoped upsert over a Hive-layout table.
-
-    The full-table rewrite of :func:`merge_upsert` cannot hold at
-    100 TB; this variant touches only the partitions that contain
-    updated keys: prune the read to those partitions (directory
-    pruning), anti-join + union within them, and rewrite with dynamic
-    partition overwrite so untouched partition dirs are neither read
-    nor written (asserted via file mtimes in tests/test_io_and_skew.py).
-    `updates` must carry ``partition_col``; keys never move partitions
-    (the upsert is partition-local — Kudu range-partition semantics,
-    docs/kudu.md:19). On a Delta-enabled cluster this becomes MERGE
-    INTO with a partition predicate. Returns the rewritten partitions.
-    """
-    parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    current = spark.read.parquet(path).filter(F.col(partition_col).isin(parts))
-    merged = current.join(
-        updates.select(key).distinct(), [key], "left_anti"
-    ).unionByName(updates)
-    # materialize BEFORE overwriting: the plan reads the same files the
-    # write replaces, which is committer-dependent (safe with the local
-    # staging committer, corruptible with direct-write committers) —
-    # and a mid-commit failure must not lose the source rows. For full
-    # atomicity + pinned readers use sources.snapshot.SnapshotTable.
-    merged = merged.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return parts
-
-
 def scd2_apply(current: DataFrame, updates: DataFrame, key: str,
                effective_col: str = "eff_version") -> DataFrame:
     """SCD2 (缓慢变化维, docs/数据模型.md:41-44): close out changed rows
@@ -186,11 +138,6 @@ def scd2_apply(current: DataFrame, updates: DataFrame, key: str,
         .withColumn("is_current", F.lit(True))
     )
     return old_rows.unionByName(fresh.select(*current.columns))
-
-
-def delete_rows(current: DataFrame, predicate) -> DataFrame:
-    """S13-as-mutation / Kudu delete: anti-filter rewrite."""
-    return current.filter(~predicate)
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str,

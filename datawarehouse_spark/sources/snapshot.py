@@ -10,11 +10,14 @@ reader is pinned to a consistent snapshot for its whole lifetime no
 matter what commits land meanwhile; writers stage new files under
 unique names and publish them with ONE atomic manifest commit
 (hard-link-then-unlink: `os.link` fails if the version already exists,
-giving optimistic concurrency — the loser retries on a fresh version).
+giving optimistic concurrency). Every writer publishes through one
+commit loop, so a writer that loses the race rebuilds its entries
+against the fresh version and retries — the same policy for append,
+overwrite, merge, delete, optimize and restore.
 
 Why this scales to 100 TB: data files are never rewritten in place and
 never deleted by a commit (only by an explicit `vacuum` of unreferenced
-files), upserts rewrite only the files of **touched partitions**
+files), `merge` rewrites only the files of **touched partitions**
 (manifest partition pruning — O(changed data), not O(table)), and the
 manifest itself is O(file count) JSON — for >10⁶ files the same design
 shards the manifest, which is exactly Iceberg's manifest-list layer.
@@ -26,8 +29,20 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from typing import Callable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: the directory name Spark's partitionBy gives a null (or empty) value
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _part_key(value) -> str | None:
+    """One spelling of a partition value, used on both sides of every
+    partition comparison. partitionBy writes null and "" to the same
+    default directory, so both are None here."""
+    return None if value is None or value == "" else str(value)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -75,6 +90,19 @@ class SnapshotTable:
             return json.load(fh)
 
     # -- read -------------------------------------------------------------
+    def _scan(self, m: dict, entries: list[dict]) -> DataFrame:
+        """The one way manifest entries become a DataFrame: read exactly
+        those files with the schema the manifest stores. No footer is
+        opened to infer a schema, so building the frame starts no Spark
+        job; an empty entry list is an empty frame of that schema."""
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(json.loads(m["schema"]))
+        paths = [os.path.join(self._ddir, e["file"]) for e in entries]
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def read(self, version: int | None = None,
              partitions: list | None = None) -> DataFrame:
         """A DataFrame over exactly one snapshot's files. The file list
@@ -82,26 +110,23 @@ class SnapshotTable:
         snapshot even if later versions commit (files are immutable and
         survive until `vacuum`). `partitions` prunes via the manifest —
         untouched files are never opened."""
-        m = self._manifest(version or self.current_version())
+        m = self._manifest(
+            self.current_version() if version is None else version
+        )
         entries = m["files"]
         if partitions is not None:
-            want = {str(p) for p in partitions}
-            entries = [e for e in entries if str(e.get("partition")) in want]
-        paths = [os.path.join(self._ddir, e["file"]) for e in entries]
-        if not paths:
-            from pyspark.sql.types import StructType
-
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema"]))
-            )
-        return self.spark.read.parquet(*paths)
+            want = {_part_key(p) for p in partitions}
+            entries = [e for e in entries
+                       if _part_key(e["partition"]) in want]
+        return self._scan(m, entries)
 
     # -- write ------------------------------------------------------------
     def _stage(self, df: DataFrame) -> list[dict]:
         """Write df's rows as new immutable files; return manifest
         entries. Partitioned tables stage via partitionBy so each file
-        carries one partition value (recorded in the entry; the column
-        itself is re-attached from the manifest at read)."""
+        carries one partition value, recorded in the entry decoded from
+        Spark's directory escaping (``%2F`` → ``/``, the default
+        partition → None)."""
         staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
         entries: list[dict] = []
         try:
@@ -117,7 +142,8 @@ class SnapshotTable:
                     base = os.path.basename(dirpath)
                     if "=" not in base:
                         continue
-                    pval = base.split("=", 1)[1]
+                    raw = base.split("=", 1)[1]
+                    pval = None if raw == _HIVE_NULL else unquote(raw)
                     for f in files:
                         if not f.endswith(".parquet"):
                             continue
@@ -158,76 +184,42 @@ class SnapshotTable:
         finally:
             os.unlink(tmp)
 
-    def append(self, df: DataFrame, max_retries: int = 3) -> int:
-        """New version = old file set + newly staged files.
-
-        Optimistic concurrency with retry: files are staged ONCE (they
-        are immutable and uniquely named, so they are valid under any
-        base version), then the manifest commit is retried against the
-        freshest version up to ``max_retries`` times when another
-        writer wins the race. Appends commute, so a retry needs no
-        re-merge — the Delta/Iceberg blind-append fast path."""
-        staged = self._stage(df)
+    def _commit_next(self, build: Callable[[dict], tuple[list[dict], str]],
+                     max_retries: int = 3) -> int:
+        """The one commit loop every writer goes through: resolve the
+        current version v and its manifest m, ``build(m)`` the new
+        (entries, schema), and publish them as v+1. When another writer
+        took v+1 first, rebuild against the fresh version — up to
+        ``max_retries`` times, then the last ConcurrentCommitError
+        surfaces. Files a losing attempt staged stay unreferenced and
+        die at the next `vacuum`."""
         last: ConcurrentCommitError | None = None
         for _ in range(max_retries + 1):
             v = self.current_version()
-            m = self._manifest(v)
+            entries, schema_json = build(self._manifest(v))
             try:
-                self._commit(v + 1, m["files"] + staged, m["schema"])
+                self._commit(v + 1, entries, schema_json)
                 return v + 1
             except ConcurrentCommitError as exc:
                 last = exc
         raise last
+
+    def append(self, df: DataFrame, max_retries: int = 3) -> int:
+        """New version = old file set + newly staged files. The files
+        are staged ONCE (immutable and uniquely named, so valid under
+        any base version); appends commute, so a retry only re-lists
+        them on the fresh manifest — the Delta/Iceberg blind-append
+        fast path."""
+        staged = self._stage(df)
+        return self._commit_next(
+            lambda m: (m["files"] + staged, m["schema"]), max_retries
+        )
 
     def overwrite(self, df: DataFrame) -> int:
-        v = self.current_version()
-        self._commit(v + 1, self._stage(df), df.schema.json())
-        return v + 1
-
-    def upsert(self, updates: DataFrame, key: str, max_retries: int = 3) -> int:
-        """MERGE: updated keys replace current rows, new keys append —
-        rewriting only the files of TOUCHED partitions (manifest
-        pruning). Kudu partition-local upsert semantics
-        (docs/kudu.md:19): on partitioned tables `updates` must carry
-        the partition column and keys must not move partitions.
-
-        On a lost commit race the WHOLE merge re-runs against the new
-        current version (unlike append, the merged content depends on
-        the snapshot it read — Delta's MERGE conflict semantics);
-        files staged by the losing attempt become unreferenced and die
-        at the next `vacuum`."""
-        from pyspark.sql import functions as F
-
-        last: ConcurrentCommitError | None = None
-        for _ in range(max_retries + 1):
-            v = self.current_version()
-            m = self._manifest(v)
-            if self.partition_col:
-                parts = {
-                    str(r[0])
-                    for r in
-                    updates.select(self.partition_col).distinct().collect()
-                }
-                touched = [e for e in m["files"] if str(e["partition"]) in parts]
-                kept = [e for e in m["files"] if str(e["partition"]) not in parts]
-            else:
-                touched, kept = m["files"], []
-            if touched:
-                cur = self.spark.read.parquet(
-                    *[os.path.join(self._ddir, e["file"]) for e in touched]
-                )
-                merged = cur.join(
-                    updates.select(key).distinct(), [key], "left_anti"
-                ).unionByName(updates.select(*cur.columns))
-            else:
-                merged = updates
-            entries = kept + self._stage(merged)
-            try:
-                self._commit(v + 1, entries, m["schema"])
-                return v + 1
-            except ConcurrentCommitError as exc:
-                last = exc
-        raise last
+        """New version = exactly df's rows, with df's schema. Staged
+        once: the result does not depend on the base version."""
+        staged = self._stage(df)
+        return self._commit_next(lambda m: (staged, df.schema.json()))
 
     def merge(
         self,
@@ -239,9 +231,9 @@ class SnapshotTable:
         insert_unmatched: bool = True,
         max_retries: int = 3,
     ) -> int:
-        """Full ``MERGE INTO`` (Delta/Iceberg/ANSI semantics — the
-        general form of :meth:`upsert`, which is
-        ``merge(src, key)`` with whole-row replacement):
+        """Full ``MERGE INTO`` (Delta/Iceberg/ANSI semantics); with only
+        ``on`` given it is a Kudu-style upsert (docs/kudu.md:19):
+        matched keys are replaced by the source row, new keys append.
 
         * WHEN MATCHED [AND ``delete_when``] THEN DELETE — evaluated
           first, like Delta's clause ordering;
@@ -256,13 +248,17 @@ class SnapshotTable:
         The source must be UNIQUE on ``on`` — multiple source matches
         for one target row make MERGE nondeterministic, so that is a
         loud ValueError exactly as Delta raises. Expressed as ONE
-        full-outer join + projection over the touched file set (the
-        same manifest partition pruning and optimistic-retry contract
-        as :meth:`upsert`: on partitioned tables the source must carry
-        the partition column and keys must not move partitions).
-        Target rows matched by no source row and source rows matched
-        by no target row ride through the same join — no second pass,
-        no window."""
+        full-outer join + projection over the touched file set: on
+        partitioned tables only the files of partitions the source
+        carries are read and rewritten (manifest pruning — O(changed
+        data), not O(table)), so the source must carry the partition
+        column and keys must not move partitions. Target rows matched
+        by no source row and source rows matched by no target row ride
+        through the same join — no second pass, no window.
+
+        A lost commit race re-runs the WHOLE merge against the new
+        current version: unlike append, the merged content depends on
+        the snapshot it read (Delta's MERGE conflict semantics)."""
         from pyspark.sql import functions as F
 
         # _t/_s are the internal match markers injected below; a user
@@ -271,8 +267,8 @@ class SnapshotTable:
         # every rewritten row committed with the marker literal — the
         # same loud-failure rule optimize() applies to its __zo/z* names
         reserved = {"_t", "_s"}
-        tcols = self.read().columns
-        for side, colset in (("target", tcols), ("source", source.columns)):
+
+        def check_names(side: str, colset: list[str]) -> None:
             hit = [c for c in colset if c.lower() in reserved]
             if hit:
                 raise ValueError(
@@ -280,47 +276,45 @@ class SnapshotTable:
                     "internal match markers (_t, _s; case-insensitive) — "
                     "rename them before merging"
                 )
-        if update_set is not None:
-            unknown = sorted(set(update_set) - set(tcols))
-            if unknown:
+
+        check_names("source", source.columns)
+
+        def build(m: dict) -> tuple[list[dict], str]:
+            tcols = [f["name"] for f in json.loads(m["schema"])["fields"]]
+            check_names("target", tcols)
+            if update_set is not None:
+                unknown = sorted(set(update_set) - set(tcols))
+                if unknown:
+                    raise ValueError(
+                        f"merge: update_set names unknown target column(s) "
+                        f"{unknown} — a typo here would otherwise commit a "
+                        "version with no update applied (Delta raises an "
+                        "unresolved-column error for the same mistake)"
+                    )
+            n_src = source.count()
+            n_keys = source.select(on).distinct().count()
+            if n_keys != n_src:
                 raise ValueError(
-                    f"merge: update_set names unknown target column(s) "
-                    f"{unknown} — a typo here would otherwise commit a "
-                    "version with no update applied (Delta raises an "
-                    "unresolved-column error for the same mistake)"
+                    f"merge: source has {n_src} rows but {n_keys} distinct "
+                    f"{on!r} keys — MERGE requires a unique source key "
+                    "(multiple matches per target row are nondeterministic; "
+                    "pre-aggregate the source)"
                 )
-        n_src = source.count()
-        n_keys = source.select(on).distinct().count()
-        if n_keys != n_src:
-            raise ValueError(
-                f"merge: source has {n_src} rows but {n_keys} distinct "
-                f"{on!r} keys — MERGE requires a unique source key "
-                "(multiple matches per target row are nondeterministic; "
-                "pre-aggregate the source)"
-            )
-        last: ConcurrentCommitError | None = None
-        for _ in range(max_retries + 1):
-            v = self.current_version()
-            m = self._manifest(v)
             if self.partition_col:
+                # Spark's string cast is the rendering partitionBy wrote
+                # into the directory names _stage decoded
                 parts = {
-                    str(r[0])
-                    for r in
-                    source.select(self.partition_col).distinct().collect()
+                    _part_key(r[0]) for r in source.select(
+                        F.col(self.partition_col).cast("string")
+                    ).distinct().collect()
                 }
                 touched = [e for e in m["files"]
-                           if str(e["partition"]) in parts]
+                           if _part_key(e["partition"]) in parts]
                 kept = [e for e in m["files"]
-                        if str(e["partition"]) not in parts]
+                        if _part_key(e["partition"]) not in parts]
             else:
                 touched, kept = m["files"], []
-            if touched:
-                cur = self.spark.read.parquet(
-                    *[os.path.join(self._ddir, e["file"]) for e in touched]
-                )
-            else:
-                cur = self.spark.createDataFrame([], self.read(v).schema)
-            cols = cur.columns
+            cur = self._scan(m, touched)
             j = (
                 cur.withColumn("_t", F.lit(1)).alias("t")
                 .join(
@@ -337,7 +331,8 @@ class SnapshotTable:
                 F.expr(update_when) if update_when else F.lit(True)
             )
             out_cols = []
-            for c in cols:
+            for field in cur.schema.fields:
+                c = field.name
                 if update_set is None:
                     upd_val = F.col(f"s.{c}")
                 else:
@@ -350,7 +345,9 @@ class SnapshotTable:
                     .when(F.col("t._t").isNotNull(), F.col(f"t.{c}"))
                     .otherwise(F.col(f"s.{c}"))  # source-only insert
                 )
-                out_cols.append(val.alias(c))
+                # the committed manifest keeps the target's schema, so
+                # the rewritten files must carry exactly its types
+                out_cols.append(val.cast(field.dataType).alias(c))
             keep_row = (
                 # matched rows survive unless deleted; target-only rows
                 # always survive; source-only rows survive iff inserting
@@ -359,23 +356,18 @@ class SnapshotTable:
                 .otherwise(F.lit(insert_unmatched))
             )
             merged = j.filter(keep_row).select(*out_cols)
-            entries = kept + self._stage(merged)
-            try:
-                self._commit(v + 1, entries, m["schema"])
-                return v + 1
-            except ConcurrentCommitError as exc:
-                last = exc
-        raise last
+            return kept + self._stage(merged), m["schema"]
+
+        return self._commit_next(build, max_retries)
 
     def delete(self, predicate) -> int:
         """DELETE WHERE predicate — full logical rewrite expressed as a
         new snapshot; at scale, pre-prune to touched partitions with a
-        partition predicate (same shape as upsert)."""
-        v = self.current_version()
-        m = self._manifest(v)
-        survivors = self.read(v).filter(~predicate)
-        self._commit(v + 1, self._stage(survivors), m["schema"])
-        return v + 1
+        partition predicate (the shape merge uses)."""
+        return self._commit_next(lambda m: (
+            self._stage(self._scan(m, m["files"]).filter(~predicate)),
+            m["schema"],
+        ))
 
     def optimize(self, zorder_by: list[str] | None = None,
                  target_rows_per_file: int = 1_000_000) -> int:
@@ -407,65 +399,65 @@ class SnapshotTable:
 
         from datawarehouse_spark.operators.layout import zorder_key
 
-        v = self.current_version()
-        m = self._manifest(v)
-        cur = self.read(v)
-        n = cur.count()
-        n_files = max(1, -(-n // int(target_rows_per_file)))
-        zdrop: list[str] = []
-        if zorder_by:
-            # zorder_key injects __zo plus z1..zN scratch columns via
-            # withColumn, which silently REPLACES a same-named user
-            # column (case-insensitively, under Spark's default
-            # resolution) — and the post-pack drop would then delete
-            # the user's data from the committed version. Loud failure
-            # instead, same convention as sql_qualify's __q guard and
-            # rank.py's _guard_internal_collisions.
-            reserved = {"__zo"} | {
-                f"z{i + 1}" for i in range(len(zorder_by))
-            }
-            hit = [c for c in cur.columns if c.lower() in reserved]
-            if hit:
-                raise ValueError(
-                    "optimize(zorder_by=...): table columns "
-                    f"{hit} collide with the Z-order scratch names "
-                    f"{sorted(reserved)} — rename them first (the "
-                    "rewrite would otherwise drop the user column's "
-                    "data from the new version)"
-                )
-            cur = zorder_key(cur, zorder_by, out_col="__zo")
-            zdrop = ["__zo"] + [f"z{i + 1}" for i in range(len(zorder_by))]
-        if self.partition_col:
-            # RANGE over (partition value, cluster key): each Spark
-            # partition then holds ONE value (boundary partitions at
-            # most two), so _stage's partitionBy split adds at most
-            # one extra file per value instead of fanning every value
-            # across every Spark partition; oversized values still
-            # split across range boundaries (equal leading keys are
-            # separable on the second key)
-            second = F.col("__zo") if zorder_by else F.xxhash64(
-                *[F.col(c) for c in cur.columns]
-            )
-            packed = cur.repartitionByRange(
-                n_files, F.col(self.partition_col), second
-            )
+        def build(m: dict) -> tuple[list[dict], str]:
+            cur = self._scan(m, m["files"])
+            n = cur.count()
+            n_files = max(1, -(-n // int(target_rows_per_file)))
+            zdrop: list[str] = []
             if zorder_by:
-                packed = packed.sortWithinPartitions(
-                    self.partition_col, "__zo"
+                # zorder_key injects __zo plus z1..zN scratch columns via
+                # withColumn, which silently REPLACES a same-named user
+                # column (case-insensitively, under Spark's default
+                # resolution) — and the post-pack drop would then delete
+                # the user's data from the committed version. Loud
+                # failure instead, same convention as sql_qualify's __q
+                # guard and rank.py's _guard_internal_collisions.
+                reserved = {"__zo"} | {
+                    f"z{i + 1}" for i in range(len(zorder_by))
+                }
+                hit = [c for c in cur.columns if c.lower() in reserved]
+                if hit:
+                    raise ValueError(
+                        "optimize(zorder_by=...): table columns "
+                        f"{hit} collide with the Z-order scratch names "
+                        f"{sorted(reserved)} — rename them first (the "
+                        "rewrite would otherwise drop the user column's "
+                        "data from the new version)"
+                    )
+                cur = zorder_key(cur, zorder_by, out_col="__zo")
+                zdrop = ["__zo"] + [f"z{i + 1}" for i in range(len(zorder_by))]
+            if self.partition_col:
+                # RANGE over (partition value, cluster key): each Spark
+                # partition then holds ONE value (boundary partitions at
+                # most two), so _stage's partitionBy split adds at most
+                # one extra file per value instead of fanning every
+                # value across every Spark partition; oversized values
+                # still split across range boundaries (equal leading
+                # keys are separable on the second key)
+                second = F.col("__zo") if zorder_by else F.xxhash64(
+                    *[F.col(c) for c in cur.columns]
                 )
-        elif zorder_by:
-            packed = cur.repartitionByRange(
-                n_files, F.col("__zo")
-            ).sortWithinPartitions("__zo")
-        else:
-            # repartition, not coalesce: coalesce can only SHRINK the
-            # partition count, silently ignoring the target when the
-            # snapshot reads into fewer splits than n_files
-            packed = cur.repartition(n_files)
-        if zdrop:
-            packed = packed.drop(*zdrop)
-        self._commit(v + 1, self._stage(packed), m["schema"])
-        return v + 1
+                packed = cur.repartitionByRange(
+                    n_files, F.col(self.partition_col), second
+                )
+                if zorder_by:
+                    packed = packed.sortWithinPartitions(
+                        self.partition_col, "__zo"
+                    )
+            elif zorder_by:
+                packed = cur.repartitionByRange(
+                    n_files, F.col("__zo")
+                ).sortWithinPartitions("__zo")
+            else:
+                # repartition, not coalesce: coalesce can only SHRINK
+                # the partition count, silently ignoring the target when
+                # the snapshot reads into fewer splits than n_files
+                packed = cur.repartition(n_files)
+            if zdrop:
+                packed = packed.drop(*zdrop)
+            return self._stage(packed), m["schema"]
+
+        return self._commit_next(build)
 
     def restore(self, version: int) -> int:
         """``RESTORE TABLE ... TO VERSION AS OF v`` (Delta 2.x): commit
@@ -475,10 +467,8 @@ class SnapshotTable:
         readers are untouched. Fails loudly if ``version``'s manifest
         has already been vacuumed away (same boundary as time
         travel)."""
-        m = self._manifest(version)  # raises FileNotFoundError if gone
-        v = self.current_version()
-        self._commit(v + 1, m["files"], m["schema"])
-        return v + 1
+        old = self._manifest(version)  # raises FileNotFoundError if gone
+        return self._commit_next(lambda m: (old["files"], old["schema"]))
 
     def clone(self, dest_path: str, version: int | None = None
               ) -> "SnapshotTable":
@@ -493,7 +483,9 @@ class SnapshotTable:
         clone may still reference — vacuum only consults the source's
         own manifests. Deep-copy (``create(spark, src.read(), ...)``)
         when the source's retention is not under your control."""
-        m = self._manifest(version or self.current_version())
+        m = self._manifest(
+            self.current_version() if version is None else version
+        )
         entries = [
             {**e, "file": os.path.join(self._ddir, e["file"])}
             for e in m["files"]
@@ -599,9 +591,10 @@ def cdc_apply(changes: DataFrame, key: str, seq_col: str,
 
     Scale shape: ONE shuffle on the key serves the whole collapse —
     the same window-dedupe shape as S13 keep-min. In production the
-    collapsed batch feeds SnapshotTable.upsert inside foreachBatch
-    (tested composition: tests/test_streaming.py snapshot-registry
-    restart); this operator is the deterministic batch core.
+    collapsed batch feeds ``SnapshotTable.merge(batch, on=key)`` inside
+    foreachBatch (tested composition: tests/test_streaming.py
+    snapshot-registry restart); this operator is the deterministic
+    batch core.
     """
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F

@@ -86,61 +86,6 @@ def test_compaction_partitioned_respects_closed_list(spark, tmp_path):
     assert back.filter(F.col("dt") == "d1").count() == 200
 
 
-def test_merge_upsert_semantics(spark):
-    """S11 — Kudu-style upsert: update hits replace, new keys append."""
-    current = spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 1), (3, "c", 1)], "k int, v string, ver int"
-    )
-    updates = spark.createDataFrame(
-        [(2, "B", 2), (4, "d", 2)], "k int, v string, ver int"
-    )
-    out = {r.k: (r.v, r.ver) for r in dwio.merge_upsert(current, updates, "k").collect()}
-    assert out == {1: ("a", 1), 2: ("B", 2), 3: ("c", 1), 4: ("d", 2)}
-
-
-def test_merge_upsert_partitioned_rewrites_only_touched(spark, tmp_path):
-    """S11 at scale — upsert rewrites ONLY partitions holding updated
-    keys; other partition dirs' files are bit-untouched."""
-    import glob
-    import os
-
-    path = str(tmp_path / "tbl")
-    current = spark.createDataFrame(
-        [(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2"), (4, "d", "d3")],
-        "k int, v string, dt string",
-    )
-    dwio.write_partitioned(current, path, ["dt"])
-    before = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/dt=*/*.parquet")
-    }
-
-    updates = spark.createDataFrame(
-        [(3, "C", "d2"), (9, "z", "d2")], "k int, v string, dt string"
-    )
-    parts = dwio.merge_upsert_partitioned(spark, path, updates, "k")
-    assert parts == ["d2"]
-
-    back = {r.k: (r.v, r.dt) for r in spark.read.parquet(path).collect()}
-    assert back == {
-        1: ("a", "d1"), 2: ("b", "d1"), 3: ("C", "d2"),
-        4: ("d", "d3"), 9: ("z", "d2"),
-    }
-    after = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{path}/dt=*/*.parquet")
-    }
-    untouched = {f for f in before if "dt=d2" not in f}
-    assert untouched and all(
-        f in after and after[f] == before[f] for f in untouched
-    )
-    assert not any("dt=d2" in f and f in after for f in before)
-
-
-def test_delete_rows(spark):
-    cur = spark.createDataFrame([(1, "x"), (2, "y")], "k int, v string")
-    left = dwio.delete_rows(cur, F.col("k") == 1)
-    assert [r.k for r in left.collect()] == [2]
-
-
 def test_salted_join_equals_plain(spark):
     t = load_tables(spark, SF_ORACLE, ("lineitem", "orders"))
     li = t["lineitem"].select(F.col("l_orderkey").alias("k"), "l_quantity")

@@ -701,7 +701,7 @@ def test_streaming_paragraph_dedup_snapshot_registry_restart(spark, tmpdir):
         # hash makes an epoch replay commute (same s rows → no-op)
         tagged = new_blocks.withColumn("epoch", F.lit(e))
         if has_reg:
-            SnapshotTable(ss, reg_path).upsert(tagged, key="s")
+            SnapshotTable(ss, reg_path).merge(tagged, on="s")
         else:
             SnapshotTable.create(ss, tagged, reg_path)
         # simulated crash: epoch 1's writes landed, its checkpoint
@@ -946,7 +946,7 @@ def test_streaming_corpus_prep_gate_chain_matches_batch_replay(spark, tmpdir):
         decisions.write.mode("overwrite").parquet(f"{out_dir}/epoch={e}")
         tagged = new_fps.withColumn("epoch", F.lit(e))
         if has_reg:
-            SnapshotTable(ss, reg_path).upsert(tagged, key="fp")
+            SnapshotTable(ss, reg_path).merge(tagged, on="fp")
         else:
             SnapshotTable.create(ss, tagged, reg_path)
         if e == 1 and os.path.exists(kill_flag):
@@ -1071,7 +1071,7 @@ def test_streaming_near_dup_gate_matches_batch_replay(spark, tmpdir):
             F.lit(e).alias("epoch"),
         )
         if has_reg:
-            SnapshotTable(ss, reg_path).upsert(tagged, key="band")
+            SnapshotTable(ss, reg_path).merge(tagged, on="band")
         else:
             SnapshotTable.create(ss, tagged, reg_path)
         if e == 1 and os.path.exists(kill_flag):
@@ -1270,11 +1270,11 @@ def test_streaming_verified_gate_replay_idempotent(spark, tmpdir):
             F.col("doc_id").cast("string").alias("bk"),
         )
         if has_bands:
-            SnapshotTable(ss, band_path).upsert(nb_tagged, key="bk")
+            SnapshotTable(ss, band_path).merge(nb_tagged, on="bk")
         else:
             SnapshotTable.create(ss, nb_tagged, band_path)
         if has_sh:
-            SnapshotTable(ss, sh_path).upsert(sh_tagged, key="bk")
+            SnapshotTable(ss, sh_path).merge(sh_tagged, on="bk")
         else:
             SnapshotTable.create(ss, sh_tagged, sh_path)
         if e == 1 and os.path.exists(kill_flag):
@@ -1440,7 +1440,7 @@ def test_streaming_exact_span_gate_kill_restart(spark, tmpdir):
         spans.write.mode("overwrite").parquet(f"{out_dir}/epoch={e}")
         tagged = new_w.select("h", F.lit(e).alias("epoch"))
         if has_reg:
-            SnapshotTable(ss, reg_path).upsert(tagged, key="h")
+            SnapshotTable(ss, reg_path).merge(tagged, on="h")
         else:
             SnapshotTable.create(ss, tagged, reg_path)
         if e == 1 and os.path.exists(kill_flag):
